@@ -614,10 +614,7 @@ def _q_cdc_multi_table_apply(spark, sf):
             )
             for name in ("clicks", "txns")
         }
-        # overlap the two independent per-table merges (results are
-        # identical to the serial path; see apply_multi_table)
-        apply_multi_table(spark, tables, changelog, batch_id=0,
-                          max_parallel_tables=2)
+        apply_multi_table(spark, tables, changelog, batch_id=0)
         out = None
         for name in ("clicks", "txns"):
             part = tables[name].read(spark).select(
@@ -667,8 +664,8 @@ def _q_cdc_incremental_read(spark, sf):
         F.pmod(F.col("user_id"), F.lit(4)).cast("int").alias("source_partition"),
     )
     # identical value to max(source_lsn)/2 (source_lsn IS event_id), but
-    # aggregated straight over the scan so the parquet aggregate
-    # pushdown resolves it from footer statistics — no full pass
+    # aggregated straight over the scan so column pruning reads only the
+    # event_id column — not the whole changelog projection
     mid = ev.agg((F.floor(F.max("event_id") / 2)).cast("long")).collect()[0][0]
     tmp = _scratch_dir("cdc-inc-")
     try:

@@ -16,7 +16,8 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from polardbx_tools_spark.lake.table import BOOKKEEPING_COLS, DELETED, LakeTable
@@ -67,15 +68,23 @@ def compact(
     bucket = table.bucket_expr(snapshot=snap)
     next_version = snap.version + 1
     staging = table.staging_dir(next_version)
-    n_rows = df.count()
-    per_bucket_files = max(1, (n_rows // max(1, len(todo))) // target_file_rows + 1)
+    # size from the parquet footers of the buckets' base + delta files —
+    # an upper bound taken before the read-side dedup, at no Spark job
+    # (an exact count would run the whole MOR merge a second time)
+    footer_rows = sum(
+        pq.ParquetFile(os.path.join(table.path, f)).metadata.num_rows
+        for f in snap.base_files(todo) + snap.delta_files(todo)
+    )
+    per_bucket_files = max(1, (footer_rows // len(todo)) // target_file_rows + 1)
     salt = F.pmod(F.xxhash64(F.col(snap.bucket_key)), F.lit(per_bucket_files))
     out_cols = [f.name for f in snap.schema.fields] + list(BOOKKEEPING_COLS)
+    obs = Observation()
     (
         df.withColumn("b", bucket)
         .repartition(F.col("b"), salt)
         .sortWithinPartitions(snap.bucket_key)
         .select(*out_cols, "b")
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
         .write.partitionBy("b")
         .mode("overwrite")
         .parquet(staging)
@@ -104,7 +113,7 @@ def compact(
                  expected_version=snap.version)
     files_after = sum(len(v) for v in replaced.values())
     return {"buckets": len(todo), "files_before": files_before,
-            "files_after": files_after, "rows": n_rows}
+            "files_after": files_after, "rows": int(obs.get["rows"])}
 
 
 def compact_if_needed(

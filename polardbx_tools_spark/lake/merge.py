@@ -77,6 +77,90 @@ class MergeStats:
     per_partition: dict[int, dict[str, int]] = field(default_factory=dict)
 
 
+@dataclass
+class BatchFacts:
+    """What a merge must know about its batch before it writes: valid and
+    quarantined event counts, per-source-partition valid events + max
+    LSN, event-time bounds of the valid events, and the touched buckets.
+    Built by :func:`batch_facts` — the ONE stats definition, whether a
+    merge computes it itself or the multi-table router computes it for
+    every route in its single routing pass."""
+
+    events: int = 0
+    invalid_events: int = 0
+    # source_partition -> {"events": n, "max_lsn": n}
+    per_partition: dict[int, dict[str, int]] = field(default_factory=dict)
+    min_ts: object = None
+    max_ts: object = None
+    buckets: list[int] = field(default_factory=list)
+
+    @classmethod
+    def from_rows(cls, rows) -> "BatchFacts":
+        ts_los = [r["min_ts"] for r in rows if r["min_ts"] is not None]
+        ts_his = [r["max_ts"] for r in rows if r["max_ts"] is not None]
+        return cls(
+            events=sum(int(r["events"] or 0) for r in rows),
+            invalid_events=sum(int(r["invalid"] or 0) for r in rows),
+            # max_lsn is None only when EVERY event of that source
+            # partition has a NULL LSN — those rows are all invalid
+            # (quarantine flags null LSNs), there is no offset to advance
+            # to, so the partition is skipped rather than crashing on
+            # int(None).
+            per_partition={
+                int(r[PART_COL]): {"events": int(r["events"] or 0),
+                                   "max_lsn": int(r["max_lsn"])}
+                for r in rows
+                if r[PART_COL] is not None and r["max_lsn"] is not None
+            },
+            min_ts=min(ts_los) if ts_los else None,
+            max_ts=max(ts_his) if ts_his else None,
+            buckets=sorted({int(b) for r in rows for b in r["buckets"]}),
+        )
+
+
+def batch_facts(
+    batch: DataFrame,
+    bucket: F.Column,
+    invalid_cond: F.Column | None = None,
+    route: F.Column | None = None,
+) -> dict:
+    """ONE groupBy pass over ``batch`` -> :class:`BatchFacts` per value of
+    ``route`` (key ``None`` when no route column is given). ``bucket`` is
+    the destination table's ``LakeTable.bucket_expr`` — for a routed batch
+    a CASE over each route's own expression, NULL for unroutable rows.
+
+    A tiny collect: ≤ #routes × #source-partitions rows, each with ≤
+    bucket_count bucket ids — the only data that ever reaches the driver.
+    """
+    valid = ~invalid_cond if invalid_cond is not None else F.lit(True)
+    keys = [PART_COL] if route is None else [route.alias("_route"), PART_COL]
+    rows = (
+        batch.withColumn("_b", F.when(valid, bucket))
+        .groupBy(*keys)
+        .agg(
+            F.sum(valid.cast("long")).alias("events"),
+            F.sum((~valid).cast("long")).alias("invalid"),
+            # offsets advance over quarantined events too: a skipped bad
+            # line is consumed (ref -maxError skip semantics)
+            F.max(LSN_COL).alias("max_lsn"),
+            # event-time bounds ride the same pass (rate-factor replay
+            # pacing + monitor delay gauge; ref MonitorThread.java:92-95).
+            # VALID rows only: a quarantined event's corrupt timestamp
+            # must not hijack pacing (one year-3000 ts would make a
+            # rate-factor run sleep forever on a row that was
+            # consumed-and-skipped)
+            F.min(F.when(valid, F.col(TS_COL))).alias("min_ts"),
+            F.max(F.when(valid, F.col(TS_COL))).alias("max_ts"),
+            F.collect_set("_b").alias("buckets"),  # nulls (invalid) excluded
+        )
+        .collect()
+    )
+    grouped: dict = {}
+    for r in rows:
+        grouped.setdefault(r["_route"] if route is not None else None, []).append(r)
+    return {k: BatchFacts.from_rows(v) for k, v in grouped.items()}
+
+
 def dedup_last_writer(
     source: DataFrame,
     key_cols: tuple[str, ...] = KEY_COLS,
@@ -128,6 +212,7 @@ def merge_into(
     invalid_cond: F.Column | None = None,
     mode: str = "cow",
     extra_offsets: dict[int, int] | None = None,
+    facts: BatchFacts | None = None,
 ) -> MergeStats:
     """Apply one changelog microbatch to the table, committing new data
     files + advanced offsets in a single atomic snapshot.
@@ -164,6 +249,11 @@ def merge_into(
     batch offsets here so every routed table records the full consumed
     window even for partitions whose events all went to other tables
     (see :mod:`polardbx_tools_spark.lake.multi`).
+
+    ``facts``: this batch's :class:`BatchFacts`, already computed by the
+    caller with this table's ``bucket_expr`` (and ``invalid_cond``, if
+    any) — the merge then skips its own stats pass. Without it the merge
+    computes them with the same :func:`batch_facts`.
     """
     t0 = time.time()
     debug = os.environ.get("MERGE_DEBUG") == "1"
@@ -179,47 +269,17 @@ def merge_into(
         expected_version = snap.version
 
     # -- 1. per-source-partition batch facts + affected buckets, ONE pass
-    # (tiny collect: ≤ #source-partitions rows, each with ≤ bucket_count
-    # bucket ids — the only data that ever reaches the driver)
+    # — skipped when the caller already computed them (the multi-table
+    # routing pass does, for every route at once)
     bucket = table.bucket_expr(snapshot=snap)
-    valid = ~invalid_cond if invalid_cond is not None else F.lit(True)
-    part_rows = (
-        batch.withColumn("_b", F.when(valid, bucket))
-        .groupBy(PART_COL)
-        .agg(
-            F.sum(valid.cast("long")).alias("events"),
-            F.sum((~valid).cast("long")).alias("invalid"),
-            # offsets advance over quarantined events too: a skipped bad
-            # line is consumed (ref -maxError skip semantics)
-            F.max(LSN_COL).alias("max_lsn"),
-            # event-time bounds ride the same pass (rate-factor replay
-            # pacing + monitor delay gauge; ref MonitorThread.java:92-95).
-            # VALID rows only: a quarantined event's corrupt timestamp
-            # must not hijack pacing (one year-3000 ts would make a
-            # rate-factor run sleep forever on a row that was
-            # consumed-and-skipped)
-            F.min(F.when(valid, F.col(TS_COL))).alias("min_ts"),
-            F.max(F.when(valid, F.col(TS_COL))).alias("max_ts"),
-            F.collect_set("_b").alias("buckets"),  # nulls (invalid) excluded
-        )
-        .collect()
-    )
-    ts_los = [r["min_ts"] for r in part_rows if r["min_ts"] is not None]
-    ts_his = [r["max_ts"] for r in part_rows if r["max_ts"] is not None]
-    stats.min_ts = min(ts_los) if ts_los else None
-    stats.max_ts = max(ts_his) if ts_his else None
-    stats.batch_events = sum(int(r["events"] or 0) for r in part_rows)
-    stats.invalid_events = sum(int(r["invalid"] or 0) for r in part_rows)
-    # max_lsn is None only when EVERY event of that source partition has a
-    # NULL LSN — those rows are all invalid (quarantine flags null LSNs),
-    # there is no offset to advance to, so the partition is skipped rather
-    # than crashing on int(None).
+    if facts is None:
+        facts = batch_facts(batch, bucket, invalid_cond).get(None, BatchFacts())
+    stats.min_ts, stats.max_ts = facts.min_ts, facts.max_ts
+    stats.batch_events = facts.events
+    stats.invalid_events = facts.invalid_events
     stats.per_partition = {
-        int(r[PART_COL]): {"events": int(r["events"] or 0),
-                           "max_lsn": int(r["max_lsn"]),
-                           "winners": 0, "conflicts": 0}
-        for r in part_rows
-        if r[PART_COL] is not None and r["max_lsn"] is not None
+        p: {**v, "winners": 0, "conflicts": 0}
+        for p, v in facts.per_partition.items()
     }
     mark("stats_agg")
     if stats.batch_events == 0:
@@ -238,8 +298,8 @@ def merge_into(
         stats.wall_ms = int((time.time() - t0) * 1000)
         return stats
     if invalid_cond is not None:
-        batch = batch.filter(valid)
-    affected = sorted({b for r in part_rows for b in r["buckets"]})
+        batch = batch.filter(~invalid_cond)
+    affected = list(facts.buckets)
     stats.affected_buckets = affected
 
     # -- 2. additive schema evolution (Iceberg-style ADD COLUMN)

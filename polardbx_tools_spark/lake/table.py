@@ -63,6 +63,11 @@ DELETED = "_deleted"      # tombstone flag: row was deleted; kept so a late,
 BOOKKEEPING_COLS = (SEQ_TS, SEQ_LSN, SEQ_PART, DELETED)
 
 
+class CommitConflict(RuntimeError):
+    """A commit's ``expected_version`` no longer matches the table: another
+    writer committed in between. Nothing of the losing commit is visible."""
+
+
 def _with_bookkeeping(schema: StructType) -> StructType:
     """Physical read schema: logical schema + bookkeeping columns."""
     from pyspark.sql.types import BooleanType, IntegerType, LongType, TimestampType
@@ -425,7 +430,7 @@ class LakeTable:
     ) -> Snapshot:
         cur = self.snapshot()
         if expected_version is not None and cur.version != expected_version:
-            raise RuntimeError(
+            raise CommitConflict(
                 f"concurrent commit detected: expected v{expected_version}, "
                 f"found v{cur.version}"
             )

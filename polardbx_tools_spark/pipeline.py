@@ -371,10 +371,17 @@ class CdcPipeline:
         exceeds the budget (see :meth:`apply_batch`).
         """
         self.ensure_table(with_tool=with_tool)
+        # window cursor origin: the window holding the changelog's first
+        # event — a changelog that starts past LSN 0 (the post-evolution
+        # half of a split stream) must not run empty windows below it
+        origin = 0
         if max_lsn is None:
-            max_lsn = changelog.agg(F.max(LSN_COL)).collect()[0][0]
+            lo_lsn, max_lsn = changelog.agg(
+                F.min(LSN_COL), F.max(LSN_COL)
+            ).collect()[0]
             if max_lsn is None:
                 return RunResult()
+            origin = lo_lsn // batch_lsns * batch_lsns
         result = RunResult()
         result.circles = 0
         run_t0 = time.time()
@@ -382,12 +389,12 @@ class CdcPipeline:
         batch_id = None
         for pass_i in range(max(1, circle)):
             replay_pass = pass_i > 0
-            lo = 0
+            lo = origin
             if not replay_pass:
                 # resume: don't re-scan windows fully below the min offset
                 offsets = self.table.offsets()
                 if offsets:
-                    lo = (min(offsets.values()) + 1) // batch_lsns * batch_lsns
+                    lo = max(lo, (min(offsets.values()) + 1) // batch_lsns * batch_lsns)
                 batch_id = lo // batch_lsns
             while lo <= max_lsn:
                 hi = lo + batch_lsns

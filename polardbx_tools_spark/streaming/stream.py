@@ -138,13 +138,16 @@ def start_multi_table_cdc_stream(
     correctly by the (ts, lsn, part) total order, at the cost of replay
     work per restarted checkpoint.
 
+    Each microbatch is one :func:`apply_multi_table` call: one routing
+    pass, then one route step per routed table, all running at once.
+
     ``compact_deltas_over``: delta-pressure MOR compaction threshold
-    (max delta files per bucket), checked per routed table after each
-    microbatch — without it a long ``merge_mode='mor'`` tail
+    (max delta files per bucket), checked in each table's route step
+    right after its merge — without it a long ``merge_mode='mor'`` tail
     accumulates deltas unboundedly (round-4 verdict gap #1). Safe
     mid-stream: compaction commits are ordinary atomic snapshots, and
-    an expected_version conflict with a concurrent merge just defers
-    the fold to the next trigger."""
+    an expected_version conflict with another writer just defers the
+    fold to the next trigger — the stream never fails over it."""
     from polardbx_tools_spark.lake.merge import LSN_COL, PART_COL
     from polardbx_tools_spark.lake.multi import (
         apply_multi_table,
@@ -181,23 +184,8 @@ def start_multi_table_cdc_stream(
             spark, tables, batch_df, batch_id=batch_id,
             key_cols=key_cols, schema_col=schema_col,
             mode=merge_mode, on_unknown=on_unknown,
+            compact_deltas_over=compact_deltas_over,
         )
-        if compact_deltas_over:
-            from polardbx_tools_spark.lake.maintenance import (
-                compact_if_needed,
-            )
-
-            for name in sorted(tables):
-                try:
-                    compact_if_needed(
-                        spark, tables[name],
-                        max_delta_files=compact_deltas_over,
-                    )
-                except RuntimeError:
-                    # concurrent-commit guard tripped (external writer on
-                    # this table); the fold retries at the next trigger —
-                    # never fail the stream over housekeeping
-                    pass
 
     writer = (
         stream.writeStream.foreachBatch(apply)

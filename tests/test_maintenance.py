@@ -98,3 +98,31 @@ def test_vacuum_grace_protects_young_staging_dirs(spark, tmp_table_path):
     assert not os.path.exists(staging)
     data_root = os.path.join(tmp_table_path, "data")
     assert os.path.isdir(data_root)
+
+
+def test_compact_footer_sizing_keeps_file_layout(spark, tmp_table_path):
+    """Compaction sizes its files-per-bucket from the parquet footers of
+    the buckets' files (no count query) and reports ``rows`` from an
+    Observation on the write. On a copy-on-write table the footer rows
+    equal the merged row count, so a target small enough to force ≥2
+    files per bucket yields exactly the layout the count-based sizing
+    wrote: 754 rows / 8 buckets / 40 rows per file -> 3 salts per bucket,
+    which land in 2-3 of the 8 shuffle partitions."""
+    pipe = loaded_pipe(spark, tmp_table_path)
+    before = normalize(pipe.read_transcripts().toPandas(), PAYLOAD)
+    n_rows = pipe.table.read(spark, include_bookkeeping=True,
+                             include_deleted=True).count()
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    # AQE would fold this toy shuffle into one task -> one file per bucket
+    spark.conf.set(key, "false")
+    try:
+        res = compact(spark, pipe.table, target_file_rows=40)
+    finally:
+        spark.conf.set(key, prev)
+    layout = {int(b): len(f) for b, f in pipe.table.snapshot().files.items()}
+    assert layout == {0: 3, 1: 2, 2: 2, 3: 3, 4: 3, 5: 2, 6: 3, 7: 3}
+    assert res["rows"] == n_rows == 754
+    assert res["files_after"] == sum(layout.values())
+    after = normalize(pipe.read_transcripts().toPandas(), PAYLOAD)
+    pdt.assert_frame_equal(before, after, check_dtype=False)

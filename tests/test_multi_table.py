@@ -382,23 +382,56 @@ def test_unknown_route_rejected_or_consumed(spark, tmp_path):
 
 
 def test_parallel_apply_equals_serial(spark, tmp_path):
-    """max_parallel_tables overlaps the per-table merges in driver
-    threads (r06 optimization); the per-table state, offsets, and merge
-    stats must be IDENTICAL to the serial path."""
-    mixed = _mixed_changelog(spark)
-    serial = _make_tables(tmp_path / "s")
-    par = _make_tables(tmp_path / "p")
-    st_s = apply_multi_table(spark, serial, mixed, batch_id=0)
-    st_p = apply_multi_table(spark, par, mixed, batch_id=0,
-                             max_parallel_tables=2)
-    assert st_p.global_offsets == st_s.global_offsets
-    for name in serial:
-        got = normalize(par[name].read(spark).toPandas(), PAYLOAD)
-        want = normalize(serial[name].read(spark).toPandas(), PAYLOAD)
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
-        assert par[name].offsets() == serial[name].offsets()
-        a, b = st_p.per_table[name], st_s.per_table[name]
-        assert (a.upserts, a.deletes, a.conflicts_resolved,
-                a.rows_written) == (
-            b.upserts, b.deletes, b.conflicts_resolved, b.rows_written)
-        assert a.per_partition == b.per_partition
+    """The concurrent route steps (one routing pass computing every
+    route's merge facts, then all tables' merges at once in driver
+    threads) must be IDENTICAL to serial per-table ``merge_into`` calls
+    on the same slices, each computing its own stats: state, offsets,
+    and every MergeStats field including per_partition."""
+    from dataclasses import asdict
+
+    for mode in ("cow", "mor"):
+        mixed = _mixed_changelog(spark)
+        routed = _make_tables(tmp_path / f"r_{mode}")
+        serial = _make_tables(tmp_path / f"s_{mode}")
+        st = apply_multi_table(spark, routed, mixed, batch_id=0, mode=mode)
+        want_st = {
+            name: merge_into(
+                spark, serial[name],
+                mixed.filter(F.col("schema") == name).drop("schema"),
+                batch_id=0, mode=mode, extra_offsets=st.global_offsets,
+            )
+            for name in sorted(serial)
+        }
+        assert sorted(st.per_table) == sorted(serial)
+        for name in serial:
+            got = normalize(routed[name].read(spark).toPandas(), PAYLOAD)
+            want = normalize(serial[name].read(spark).toPandas(), PAYLOAD)
+            pd.testing.assert_frame_equal(got, want, check_dtype=False)
+            assert routed[name].offsets() == serial[name].offsets()
+            a, b = asdict(st.per_table[name]), asdict(want_st[name])
+            a.pop("wall_ms"), b.pop("wall_ms")
+            assert a == b, (mode, name)
+            assert a["per_partition"] and a["affected_buckets"]
+
+
+def test_routed_apply_job_count_pinned(spark, tmp_path):
+    """Host-independent cost pin for one two-table MOR routed apply: ONE
+    routing job pair (its single exchange feeds every route's facts),
+    then per table only the merge's shuffle + write — no per-table stats
+    pass. The jobs are counted by job group, which reaches the route
+    threads only if they inherit the caller's local properties, so this
+    also pins that inheritance."""
+    mixed = _mixed_changelog(spark, n_events=600, seed=31)
+    tables = _make_tables(tmp_path)
+    sc = spark.sparkContext
+    group = "routed-apply-job-count"
+    sc.setJobGroup(group, "pinned job count")
+    try:
+        st = apply_multi_table(spark, tables, mixed, batch_id=0, mode="mor")
+    finally:
+        sc.setJobGroup("", "")
+    assert all(s.batch_events for s in st.per_table.values())
+    # 3 jobs up to the routing collect, then 2 per table (the merge's
+    # shuffle map stage + its write); a per-table stats pass would add
+    # 2 more per table (11 in all)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3 + 2 * 2

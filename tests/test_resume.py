@@ -97,3 +97,38 @@ def test_time_travel_versions_monotone(spark, tmp_path):
     early = pipe.table.snapshot(versions[1])
     late = pipe.table.snapshot(versions[-1])
     assert sum(map(int, early.offsets.values())) <= sum(map(int, late.offsets.values()))
+
+
+def test_split_run_starts_at_changelog_first_window(spark, tmp_path):
+    """A run over the post-evolution half of a split changelog starts its
+    window cursor at the window holding that half's first event, not at
+    the resume floor below it: the window between the floor and the
+    split is fully consumed already, and replaying it would be an empty
+    apply (an empty stats query for nothing). State still equals each
+    half applied as one batch."""
+    from polardbx_tools_spark.changelog.generator import split_for_evolution
+
+    cl = generate_changelog(spark, SPEC)
+    pre, post = split_for_evolution(cl, 750)
+    ref = CdcPipeline(spark, str(tmp_path / "ref"), bucket_count=8)
+    ref.ensure_table()
+    ref.apply_batch(pre, 0)
+    ref.apply_batch(post, 1)
+    want = normalize(ref.read_transcripts().toPandas(), PAYLOAD)
+    pipe = CdcPipeline(spark, str(tmp_path / "split"), bucket_count=8)
+    pipe.run(pre, batch_lsns=375)
+    # the resume floor alone would restart at window [375, 750)
+    assert min(pipe.table.offsets().values()) + 1 < 750
+    applied: list[int] = []
+    real = pipe.apply_batch
+
+    def spy(batch, batch_id, **kw):
+        applied.append(batch_id)
+        return real(batch, batch_id, **kw)
+
+    pipe.apply_batch = spy
+    res = pipe.run(post, batch_lsns=375, with_tool=True)
+    assert applied == [2, 3]
+    assert all(s.batch_events for s in res.stats)
+    got = normalize(pipe.read_transcripts().toPandas(), PAYLOAD)
+    pdt.assert_frame_equal(got, want, check_dtype=False)
