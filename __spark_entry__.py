@@ -181,20 +181,6 @@ def _q_fingerprint_report(spark, sf):
     )
 
 
-def _q_rt_histogram(spark, sf):
-    """Latency histogram buckets (ref A4: Frodo.java:1100-1139)."""
-    ev = _t(spark, sf, "events")
-    return rpt.rt_histogram(ev, F.col("value") / 1000.0)
-
-
-def _q_summary_report(spark, sf):
-    """Run totals sheet (ref A5)."""
-    ev = _t(spark, sf, "events")
-    return rpt.summary_report(
-        ev, F.col("value") / 1000.0, (F.col("event_type") == "error").cast("int")
-    )
-
-
 # ---------------------------------------- projection / masking / export
 
 def _q_projection_filter(spark, sf):
@@ -1212,6 +1198,30 @@ def _q_dedup_minhash_lsh(spark, sf):
     ).select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
+_TOKD_CACHE: dict = {}
+
+
+def _tokenized_docs_shared(spark, sf):
+    """ONE persisted tokenized-documents relation per (session, sf_dir),
+    keyed by applicationId like _minhash_pairs_shared. It feeds both
+    text_rank_suite rankers: without it each leg re-tokenizes the corpus
+    (tfidf once, bm25 twice — its postings and its (N, avgdl) aggregate
+    are separate subtrees), so the suite paid the tokenize scan 3x per
+    run. Persisted once per key instead of once per call, so repeated
+    calls do not strand one cache each. Materialized eagerly: the
+    suite's union subtrees otherwise RACE to build the same cached
+    partitions in one job (Spark does not lock in-flight cache builds),
+    re-tokenizing concurrently."""
+    key = (spark.sparkContext.applicationId, sf)
+    hit = _TOKD_CACHE.get(key)
+    if hit is not None:
+        return hit
+    tokd = text.tokenized_docs(_t(spark, sf, "documents")).persist()
+    tokd.count()
+    _TOKD_CACHE[key] = tokd
+    return tokd
+
+
 def _q_text_rank_suite(spark, sf):
     """Lexical ranking in one labelled-union entry (50-cap
     consolidation of the former text_tfidf_top_terms slot). Legs, all
@@ -1229,15 +1239,7 @@ def _q_text_rank_suite(spark, sf):
     from polardbx_tools_spark.operators import retrieval
 
     d = _t(spark, sf, "documents")
-    # ONE persisted tokenized relation feeds both rankers: without it
-    # each leg re-tokenizes the corpus (tfidf once, bm25 twice — its
-    # postings and its (N, avgdl) aggregate are separate subtrees), so
-    # the suite paid the tokenize scan 3x per run
-    # materialized eagerly: the union's four subtrees otherwise RACE to
-    # build the same cached partitions in one job (Spark does not lock
-    # in-flight cache builds), re-tokenizing concurrently
-    tokd = text.tokenized_docs(d).persist()
-    tokd.count()
+    tokd = _tokenized_docs_shared(spark, sf)
     tfl = text.tf_idf_top_terms(d, k=5, tokenized=tokd).select(
         F.lit("tfidf").alias("leg"),
         F.col("doc_id").alias("a"), F.lit(-1).cast("long").alias("b"),

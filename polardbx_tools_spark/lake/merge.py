@@ -83,8 +83,9 @@ class BatchFacts:
     quarantined event counts, per-source-partition valid events + max
     LSN, event-time bounds of the valid events, and the touched buckets.
     Built by :func:`batch_facts` — the ONE stats definition, whether a
-    merge computes it itself or the multi-table router computes it for
-    every route in its single routing pass."""
+    merge computes it itself, the multi-table router computes it for
+    every route in its single routing pass, or ``CdcPipeline.run``
+    computes it for every LSN window in its one planning pass per run."""
 
     events: int = 0
     invalid_events: int = 0

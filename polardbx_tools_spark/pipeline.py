@@ -7,13 +7,24 @@ DELETE consumers → 60s history-file checkpoint
 ``model/ProducerExecutionContext.java:200-247``). On Spark the whole
 threaded apparatus collapses to a microbatch loop:
 
+    plan    = batch_facts(changelog minus committed offsets, by window)
     for each LSN window:
         batch   = changelog ∩ window, minus already-committed offsets
-        quarantine malformed rows (error budget, ref ``-maxError``:
-            ``worker/insert/DirectImportWorker.java:107-128``)
-        merge_into(table, batch)      # dedup + COW merge
-        (offsets advance inside the same atomic snapshot commit)
+        concurrently:
+            quarantine malformed rows to _errors/ (a thread; only when
+                plan[window] counts any, ref ``-maxError``:
+                ``worker/insert/DirectImportWorker.java:107-128``)
+            merge_into(table, batch, facts=plan[window])  # COW/MOR merge
+            (offsets advance inside the same atomic snapshot commit)
+        error budget gate
         append lineage metrics
+
+The stats are planned ONCE per run (one groupBy by window id), so the
+only Spark work on a window's critical path is its merge, with the
+quarantine write overlapping it — the reference overlaps its stages the
+same way (producers fill the ring buffer while consumers apply,
+``exec/BaseExecutor.java:232-345``; bad lines are logged as they are
+skipped, not in an extra pass).
 
 Exactly-once: offsets live *inside* the table snapshot, so "merge
 applied" and "offsets advanced" are one atomic pointer flip. A crash
@@ -25,10 +36,16 @@ coupling (``cmd/FlagOption.java:47-48``).
 
 from __future__ import annotations
 
+import json
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import cached_property
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,7 +56,9 @@ from polardbx_tools_spark.lake.merge import (
     OP_COL,
     PART_COL,
     TS_COL,
+    BatchFacts,
     MergeStats,
+    batch_facts,
     merge_into,
 )
 from polardbx_tools_spark.lake.table import LakeTable
@@ -63,6 +82,11 @@ class RunResult:
         if not d:
             return {}
         return {"min": min(d), "max": max(d), "avg": sum(d) / len(d)}
+
+
+@dataclass
+class _Guard:
+    committed: bool = False  # the guarded step's merge has committed
 
 
 class CdcPipeline:
@@ -130,7 +154,10 @@ class CdcPipeline:
             (F.col(LSN_COL) > committed) | F.col(LSN_COL).isNull()
         )
 
-    def _split_quarantine(self, df: DataFrame) -> tuple[DataFrame, F.Column]:
+    @cached_property
+    def _invalid(self) -> F.Column:
+        """Malformed-event predicate, built once per pipeline (each
+        Column costs a py4j round trip; every window reuses it)."""
         # NULL source_partition / ts are malformed too: such events would
         # merge but escape offset accounting and lineage, so they would be
         # idempotently re-merged on every resume (and never counted).
@@ -143,7 +170,7 @@ class CdcPipeline:
         )
         for k in self.key_cols:
             bad = bad | F.col(k).isNull()
-        return df, bad
+        return bad
 
     def _quarantine_reason(self) -> F.Column:
         """First matching malformation cause — persisted with each
@@ -160,6 +187,18 @@ class CdcPipeline:
             reason = reason.when(F.col(k).isNull(), F.lit(f"null_key:{k}"))
         return reason.otherwise(F.lit("unknown"))
 
+    def _facts(self, batch: DataFrame, route: F.Column | None = None) -> dict:
+        """This table's :class:`BatchFacts` of ``batch`` per ``route``
+        value: the same :func:`batch_facts` pass a merge runs itself."""
+        return batch_facts(batch, self.table.bucket_expr(), self._invalid, route)
+
+    def _quarantine(self, batch: DataFrame, batch_id: int) -> None:
+        batch.filter(self._invalid).withColumn(
+            "_error_reason", self._quarantine_reason()
+        ).withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(
+            self._errors_dir
+        )
+
     # --------------------------------------------------------------- apply
 
     def apply_batch(
@@ -168,6 +207,7 @@ class CdcPipeline:
         batch_id: int,
         skip_offsets_filter: bool = False,
         timeout: float | None = None,
+        facts: BatchFacts | None = None,
     ) -> MergeStats:
         """Apply one already-windowed changelog slice.
 
@@ -177,41 +217,64 @@ class CdcPipeline:
 
         ``timeout`` (seconds) is the per-batch wall guard (frodo's
         ``--sql-timeout``, ``MysqlWrapper.java:53-126``, applied at the
-        engine's unit of work — the microbatch): a watchdog cancels the
-        batch's Spark job group on expiry, the batch id is quarantined
-        to ``_errors/timeout_batches.jsonl`` and the run aborts. Offsets
-        never advanced (they commit with the data), so a resumed run
-        retries the batch from the committed snapshot.
+        engine's unit of work — the microbatch): see
+        :meth:`_batch_guard`. It covers the whole step, quarantine write
+        and merge, so a timeout cancels both.
+
+        ``facts``: the slice's :class:`BatchFacts` (after the offsets
+        filter), as :meth:`run` plans them for every window in one pass.
+        Without them (the streaming ``foreachBatch``, direct callers)
+        they are computed here with the same :func:`batch_facts`, so
+        there is one stats definition.
+
+        When the facts count malformed events, the quarantine write
+        (``_errors/``, one row per event with its ``_error_reason`` and
+        ``_batch_id``) runs in a thread alongside the merge, and is
+        joined before the ``max_errors`` gate. A merge error surfaces
+        first, once the thread is joined; a quarantine-write error
+        propagates too. So after a FAILED merge this window's quarantine
+        rows may already be in ``_errors``, and the retry appends them
+        again under the same ``_batch_id``. The thread inherits this
+        call's local properties (job group, tracing span), so its jobs
+        are attributed to this step.
         """
         if not skip_offsets_filter:
             batch = self._offsets_filter(batch)
-        df, bad = self._split_quarantine(batch)
-        if timeout is not None:
-            stats = self._apply_with_timeout(df, bad, batch_id, timeout)
-        else:
-            stats = merge_into(
-                self.spark,
-                self.table,
-                df,
-                batch_id=batch_id,
-                key_cols=self.key_cols,
-                invalid_cond=bad,
-                mode=self.merge_mode,
-            )
-        if stats.invalid_events:
-            # rare path: only malformed batches pay a second (filtered) scan
-            df.filter(bad).withColumn(
-                "_error_reason", self._quarantine_reason()
-            ).withColumn("_batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(self._errors_dir)
-            if stats.invalid_events > self.max_errors:
-                raise RuntimeError(
-                    f"batch {batch_id}: {stats.invalid_events} malformed events "
-                    f"exceed maxErrors={self.max_errors} "
-                    f"(quarantined at {self._errors_dir}; valid events of this "
-                    f"window were merged idempotently before the gate fired)"
+        with self._batch_guard(batch_id, timeout) as guard:
+            if facts is None:
+                facts = self._facts(batch).get(None, BatchFacts())
+            # leaving the pool joins the quarantine thread, so a merge
+            # error surfaces only after it (and the guard's cancel
+            # reaches both)
+            with ThreadPoolExecutor(1) as pool:
+                quarantine = (
+                    pool.submit(
+                        inheritable_thread_target(self.spark)(self._quarantine),
+                        batch, batch_id,
+                    )
+                    if facts.invalid_events
+                    else None
                 )
+                stats = merge_into(
+                    self.spark,
+                    self.table,
+                    batch,
+                    batch_id=batch_id,
+                    key_cols=self.key_cols,
+                    invalid_cond=self._invalid,
+                    mode=self.merge_mode,
+                    facts=facts,
+                )
+                guard.committed = stats.committed_version is not None
+            if quarantine is not None:
+                quarantine.result()
+        if stats.invalid_events > self.max_errors:
+            raise RuntimeError(
+                f"batch {batch_id}: {stats.invalid_events} malformed events "
+                f"exceed maxErrors={self.max_errors} "
+                f"(quarantined at {self._errors_dir}; valid events of this "
+                f"window were merged idempotently before the gate fired)"
+            )
 
         self.table.append_lineage(
             self.spark,
@@ -232,10 +295,22 @@ class CdcPipeline:
         )
         return stats
 
-    def _apply_with_timeout(self, df, bad, batch_id: int, timeout: float) -> MergeStats:
-        import json
-        import threading
-
+    @contextmanager
+    def _batch_guard(self, batch_id: int, timeout: float | None):
+        """The ONE per-batch wall guard around a batch's Spark work: a
+        watchdog cancels the batch's job group on expiry, the batch id
+        is recorded in ``_errors/timeout_batches.jsonl`` and a
+        ``RuntimeError`` aborts the run. Offsets commit with the data, so
+        a batch cancelled before its commit did not advance them and a
+        resumed run retries it. The body sets ``committed`` once its
+        merge has committed: an overrun after that (the merge's
+        driver-side tail, or the overlapped quarantine write) is
+        recorded as committed and the run resumes AFTER the batch.
+        ``timeout=None`` guards nothing."""
+        guard = _Guard()
+        if timeout is None:
+            yield guard
+            return
         sc = self.spark.sparkContext
         group = f"cdc-batch-{batch_id}"
         fired = threading.Event()
@@ -248,15 +323,7 @@ class CdcPipeline:
         sc.setJobGroup(group, f"cdc microbatch {batch_id} (timeout {timeout}s)")
         watchdog.start()
         try:
-            stats_ok = merge_into(
-                self.spark,
-                self.table,
-                df,
-                batch_id=batch_id,
-                key_cols=self.key_cols,
-                invalid_cond=bad,
-                mode=self.merge_mode,
-            )
+            yield guard
         except Exception as e:
             # attribute to the timeout ONLY when the watchdog fired AND
             # the error is the cancellation it caused — a genuine merge
@@ -267,53 +334,81 @@ class CdcPipeline:
             # "cancelled"/"cancel" in their message)
             if not fired.is_set() or "cancel" not in str(e).lower():
                 raise
-            os.makedirs(self._errors_dir, exist_ok=True)
-            with open(
-                os.path.join(self._errors_dir, "timeout_batches.jsonl"),
-                "a",
-                encoding="utf-8",
-            ) as f:
-                f.write(json.dumps({
-                    "batch_id": batch_id,
-                    "timeout_sec": timeout,
-                    "error": str(e)[:500],
-                }) + "\n")
-            raise RuntimeError(
-                f"batch {batch_id} exceeded batch_timeout={timeout}s and was "
-                f"cancelled (quarantined at {self._errors_dir}/"
-                f"timeout_batches.jsonl; offsets did not advance — a resumed "
-                f"run retries this window)"
-            ) from e
+            raise self._timed_out(batch_id, timeout, guard.committed, str(e)) from e
         finally:
             watchdog.cancel()
             sc.setJobGroup("", "")
         if fired.is_set():
-            # the watchdog fired while no Spark job was active (the
-            # merge's driver-side tail: file listing, commit), so
-            # cancelJobGroup had nothing to cancel and the batch
-            # COMMITTED. It cannot be quarantined — offsets advanced
-            # atomically with the data — so record the overrun and abort
-            # the RUN instead of silently blowing the budget; a resumed
-            # run continues AFTER this batch via its offsets.
-            os.makedirs(self._errors_dir, exist_ok=True)
-            with open(
-                os.path.join(self._errors_dir, "timeout_batches.jsonl"),
-                "a",
-                encoding="utf-8",
-            ) as f:
-                f.write(json.dumps({
-                    "batch_id": batch_id,
-                    "timeout_sec": timeout,
-                    "committed": True,
-                }) + "\n")
-            raise RuntimeError(
+            # the watchdog fired while no Spark job was active (a
+            # driver-side tail: file listing, commit), so cancelJobGroup
+            # had nothing to cancel
+            raise self._timed_out(batch_id, timeout, guard.committed)
+
+    def _timed_out(
+        self, batch_id: int, timeout: float, committed: bool, error: str | None = None
+    ) -> RuntimeError:
+        """Record a batch's overrun and build the error that aborts the run."""
+        rec: dict = {"batch_id": batch_id, "timeout_sec": timeout}
+        if committed:
+            rec["committed"] = True
+        if error is not None:
+            rec["error"] = error[:500]
+        os.makedirs(self._errors_dir, exist_ok=True)
+        with open(
+            os.path.join(self._errors_dir, "timeout_batches.jsonl"),
+            "a",
+            encoding="utf-8",
+        ) as f:
+            f.write(json.dumps(rec) + "\n")
+        if committed:
+            # it cannot be quarantined — offsets advanced atomically
+            # with the data — so abort the RUN instead of silently
+            # blowing the budget
+            return RuntimeError(
                 f"batch {batch_id} exceeded batch_timeout={timeout}s during "
                 f"its commit tail and had already committed when the "
                 f"watchdog fired; run aborted (overrun recorded at "
                 f"{self._errors_dir}/timeout_batches.jsonl; a resumed run "
                 f"continues AFTER this batch)"
             )
-        return stats_ok
+        return RuntimeError(
+            f"batch {batch_id} exceeded batch_timeout={timeout}s and was "
+            f"cancelled (quarantined at {self._errors_dir}/"
+            f"timeout_batches.jsonl; offsets did not advance — a resumed "
+            f"run retries this window)"
+        )
+
+    def _plan(
+        self,
+        changelog: DataFrame,
+        lo: int,
+        max_lsn: int,
+        batch_lsns: int,
+        replay_pass: bool,
+    ) -> dict[int, BatchFacts]:
+        """:class:`BatchFacts` of every window from ``lo`` on, keyed by
+        window id ``lsn // batch_lsns``, in ONE groupBy pass.
+
+        The first pass plans over the changelog minus the run-start
+        offsets, and that is exact: windows are disjoint and increasing,
+        and window k's commit raises an offset only to an LSN below the
+        start of window k+1, so for every row of window k+1 the filter
+        at window time keeps exactly what the run-start filter keeps.
+        Replay passes bypass the filter and share one unfiltered plan.
+        NULL-LSN rows fall outside every window, as they do in the
+        window filters."""
+        lsn = F.col(LSN_COL)
+        end = (max_lsn // batch_lsns + 1) * batch_lsns
+        src = changelog.filter((lsn >= lo) & (lsn < end))
+        if not replay_pass:
+            src = self._offsets_filter(src)
+        # floor division in integer arithmetic (Spark's `div` truncates
+        # toward zero): equals the loop's lo // batch_lsns for negative
+        # LSNs too, and stays exact past 2**53
+        window = F.expr(
+            f"({LSN_COL} - pmod({LSN_COL}, {batch_lsns})) div {batch_lsns}"
+        )
+        return self._facts(src, route=window)
 
     def run(
         self,
@@ -368,7 +463,16 @@ class CdcPipeline:
         The final table state is identical to a single pass (tested).
 
         ``batch_timeout`` aborts + quarantines a batch whose wall time
-        exceeds the budget (see :meth:`apply_batch`).
+        exceeds the budget (see :meth:`apply_batch`). The pass that plans
+        a pass's windows runs under the same guard, attributed to its
+        first window.
+
+        The batch facts (event counts, offsets, ts bounds, touched
+        buckets) of every window are planned in ONE pass per run — one
+        more for the replay passes of ``circle``, which share it — and
+        each window hands its facts to :meth:`apply_batch`. A window the
+        plan has no rows for gets empty facts: it launches no Spark job
+        and commits nothing, but still counts in ``batches``.
         """
         self.ensure_table(with_tool=with_tool)
         # window cursor origin: the window holding the changelog's first
@@ -387,6 +491,7 @@ class CdcPipeline:
         run_t0 = time.time()
         first_ts = None  # event-time origin for rate-factor replay
         batch_id = None
+        plans: dict[bool, dict[int, BatchFacts]] = {}  # by replay_pass
         for pass_i in range(max(1, circle)):
             replay_pass = pass_i > 0
             lo = origin
@@ -396,6 +501,12 @@ class CdcPipeline:
                 if offsets:
                     lo = max(lo, (min(offsets.values()) + 1) // batch_lsns * batch_lsns)
                 batch_id = lo // batch_lsns
+            if lo <= max_lsn and replay_pass not in plans:
+                with self._batch_guard(batch_id, batch_timeout):
+                    plans[replay_pass] = self._plan(
+                        changelog, lo, max_lsn, batch_lsns, replay_pass
+                    )
+            plan = plans.get(replay_pass, {})
             while lo <= max_lsn:
                 hi = lo + batch_lsns
                 window = changelog.filter(
@@ -406,6 +517,7 @@ class CdcPipeline:
                     batch_id=batch_id,
                     skip_offsets_filter=replay_pass,
                     timeout=batch_timeout,
+                    facts=plan.get(lo // batch_lsns, BatchFacts()),
                 )
                 result.batches += 1
                 result.events_applied += stats.batch_events

@@ -85,3 +85,30 @@ def test_batch_timeout_fires_and_quarantines(spark, tmp_path):
     res = pipe.run(cl, batch_lsns=200, max_lsn=200, with_tool=True,
                    batch_timeout=120.0)
     assert res.events_applied == 200
+
+
+def test_plan_pass_is_under_batch_timeout(spark, tmp_path):
+    """The run's one facts pass, which plans every window before the
+    first merge, runs under the same watchdog, attributed to the first
+    window: at 2 s per row the crawling changelog would keep an
+    unguarded pass busy for about 100 s on 4 cores."""
+    cl = generate_changelog(spark, ChangelogSpec(n_events=200, n_convs=10, seed=5))
+
+    @F.udf("int")
+    def slower(x):
+        time.sleep(2.0)
+        return x
+
+    crawling = cl.withColumn("source_partition", slower("source_partition"))
+    path = str(tmp_path / "t")
+    pipe = CdcPipeline(spark, path, bucket_count=4)
+    t0 = time.time()
+    with pytest.raises(RuntimeError, match="batch_timeout"):
+        pipe.run(crawling, batch_lsns=200, max_lsn=200, with_tool=True,
+                 batch_timeout=3.0)
+    wall = time.time() - t0
+    assert wall < 60, f"watchdog did not cancel the plan pass promptly ({wall:.0f}s)"
+    qfile = os.path.join(path, "_errors", "timeout_batches.jsonl")
+    rec = json.loads(open(qfile).readline())
+    assert rec["batch_id"] == 0 and "committed" not in rec
+    assert pipe.table.offsets() == {}
